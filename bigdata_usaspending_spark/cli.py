@@ -668,14 +668,13 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql import functions as F
 
+        from .index_store import has
         from .io import local_frame
         from .operators import similarity
         from .session import apply_runtime_confs
 
         apply_runtime_confs(spark)
-        # Hadoop-FS existence check: layout autodetection must work on
-        # whatever filesystem the index lives on (similarity._index_has)
-        is_pq = similarity._index_has(spark, args.index, "codebooks.parquet")
+        is_pq = has(spark, args.index, "codebooks.parquet")
         if args.action in ("build", "add", "stream-add") and not args.vectors:
             raise SystemExit(f"ann-index {args.action} needs --vectors")
         if args.action == "stream-search":
@@ -712,7 +711,7 @@ def main(argv: list[str] | None = None) -> int:
                 checkpoint=args.checkpoint,
                 compact_every=args.compact_every,
             ).stop()
-            n = similarity._read_index_vectors(spark, args.index).count()
+            n = similarity.ANN.read_live(spark, args.index).count()
             print(f"index now holds {n} vectors ({args.index})")
             return 0
         if args.action == "compact":
@@ -809,37 +808,14 @@ def main(argv: list[str] | None = None) -> int:
                     assigned, cents, cb, vec_col=args.vec_col
                 )
                 similarity._ivf_pq_index_write_encoded(
-                    encoded, cents, cb, args.index
+                    encoded, cents, cb, args.index, rotation
                 )
-                if rotation is not None:
-                    similarity._write_index_rotation(
-                        spark, rotation, args.index
-                    )
             else:
-                # a rebuild over a former IVF-PQ directory must not leave
-                # stale codebooks behind — add/search autodetect PQ from
-                # that file and would probe a codes-less vectors layout.
-                # Hadoop FS, not a local rmtree: a local os-path delete
-                # silently no-ops on s3a/hdfs and the stale file survives.
-                similarity._delete_index_component(
-                    spark, args.index, "codebooks.parquet"
-                )
                 similarity.ivf_index_write(
                     df, cents, args.index,
                     id_col=args.id_col, vec_col=args.vec_col,
                 )
-            if rotation is None:
-                # a rebuild without --opq over a former OPQ directory
-                # must not leave a stale rotation behind — probes apply
-                # it automatically when the file exists.  Same Hadoop-FS
-                # contract as the codebooks clear above: on an object
-                # store a driver-local rmtree silently no-ops and every
-                # subsequent probe would rotate queries against
-                # un-rotated vectors.
-                similarity._delete_index_component(
-                    spark, args.index, "rotation.parquet"
-                )
-            n = similarity._read_index_vectors(spark, args.index).count()
+            n = similarity.ANN.read_live(spark, args.index).count()
             kind = "OPQ-IVF-PQ" if args.opq else (
                 "IVF-PQ" if args.pq else "IVF"
             )
@@ -855,9 +831,7 @@ def main(argv: list[str] | None = None) -> int:
                     spark, args.index, df, args.batch_id,
                     id_col=args.id_col, vec_col=args.vec_col,
                 )
-                n = similarity._read_index_vectors(
-                    spark, args.index
-                ).count()
+                n = similarity.ANN.read_live(spark, args.index).count()
                 verb = "applied" if applied else "skipped (replay)"
                 print(
                     f"batch {args.batch_id} {verb}; index now holds {n} "
@@ -874,7 +848,7 @@ def main(argv: list[str] | None = None) -> int:
                     spark, args.index, df,
                     id_col=args.id_col, vec_col=args.vec_col,
                 )
-            n = similarity._read_index_vectors(spark, args.index).count()
+            n = similarity.ANN.read_live(spark, args.index).count()
             print(f"index now holds {n} vectors ({args.index})")
             return 0
         # search
@@ -1056,7 +1030,7 @@ def main(argv: list[str] | None = None) -> int:
                 df, args.index, id_col=args.id_col, text_col=args.text_col,
                 k=args.k, w=args.w, portable=args.portable,
             )
-            n = dd._read_index_fps(spark, args.index).count()
+            n = dd.WINNOW.read_live(spark, args.index).count()
             print(
                 f"built winnow index over {n} fingerprinted docs "
                 f"({args.index})"
@@ -1067,7 +1041,7 @@ def main(argv: list[str] | None = None) -> int:
                 spark, args.index, df,
                 id_col=args.id_col, text_col=args.text_col,
             )
-            n = dd._read_index_fps(spark, args.index).count()
+            n = dd.WINNOW.read_live(spark, args.index).count()
             print(f"index now holds {n} fingerprinted docs ({args.index})")
             return 0
         fn = {

@@ -1,10 +1,6 @@
-"""Scalar function helpers (SURVEY.md §2.8).
-
-The reference did these conversions row-at-a-time in driver Python
-(app/ml_app.py:561-576 string->date with null-on-error; :480-485
-string->float with null-on-error). Spark's to_date / cast already have
-null-on-malformed semantics, so each helper is a thin columnar expression that
-stays inside whole-stage codegen.
+"""Scalar function helpers (SURVEY.md §2.8): the exact-decimal sum and the
+calendar buckets. Each helper is a thin columnar expression that stays
+inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -17,19 +13,6 @@ from pyspark.sql import functions as F
 # (Spark vs DuckDB oracle) and partition-order-independent — double sums are
 # neither.
 EXACT_DECIMAL = "decimal(27,6)"
-
-
-def safe_to_date(col: Column | str, fmt: str = "yyyy-MM-dd") -> Column:
-    """String -> date, null on malformed (reference: app/ml_app.py:561-576).
-    try_to_date keeps null-on-error semantics under ANSI sessions too."""
-    return F.try_to_date(F.col(col) if isinstance(col, str) else col, F.lit(fmt))
-
-
-def safe_to_decimal(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
-    """String/number -> decimal money, null on malformed
-    (reference: app/ml_app.py:480-485 used float(); we use exact decimal)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast(f"decimal({precision},{scale})")
 
 
 def exact_sum(col: Column | str, alias: str, out_scale: int = 2) -> Column:

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io import local_frame
+from ..index_store import IndexStore
 from .text import fingerprint, ngram_occurrences, tokens
 
 # Mersenne prime 2^31-1 for the minhash affine family; base hashes are < p
@@ -1015,6 +1015,18 @@ def winnow_scrub_against_index(
     return _scrub_covered_spans(batch, id_col, text_col, per_doc)
 
 
+# the winnow family of the persisted-index store. The fps scan is spread
+# across cores: winnow_index_compact rewrites fps.parquet into a few
+# size-targeted files, and a compacted moderate index would otherwise scan
+# as very few tasks while its consumers explode fingerprints and run
+# candidate joins (measured at the 100x stress decade: 15.7 s over a
+# one-file index vs 3.9 s fragmented). The spread is a no-op once files
+# outnumber cores.
+WINNOW = IndexStore(
+    "winnow_index", "fps.parquet", scan=_ensure_parallelism, id_col="_id"
+)
+
+
 def winnow_pos_index_write(
     df: DataFrame,
     path: str,
@@ -1024,9 +1036,8 @@ def winnow_pos_index_write(
     w: int = 4,
     portable: bool = False,
 ) -> None:
-    """Persist a positioned winnow index — the text-side analog of
-    ``ivf_pq_index_write``'s build-once / add-batches / probe-forever
-    lifecycle. Layout:
+    """Persist a positioned winnow index (the build-once / add-batches /
+    probe-forever lifecycle of index_store). Family components:
 
     - ``{path}/meta.json`` — the fingerprint parameters (k, w, portable,
       id column name/type). Probes and adds MUST reuse them (a probe
@@ -1037,64 +1048,57 @@ def winnow_pos_index_write(
     - ``{path}/fps.parquet`` — one row per doc: ``(_id, pfps)`` robust
       positioned fingerprints (winnow_pos_index's shape; empty-set docs
       excluded there)."""
+    from ..io import hadoop_write_json
+
     pfps = winnow_pos_index(df, id_col, text_col, k=k, w=w, portable=portable)
-    pfps.write.mode("overwrite").parquet(f"{path}/fps.parquet")
+    WINNOW.rebuild(pfps, path)
     meta = {
         "k": int(k), "w": int(w), "portable": bool(portable),
         "id_col": id_col,
         "id_type": dict(df.dtypes)[id_col],
     }
-    _winnow_meta_write(df.sparkSession, path, meta)
-    # a rebuild over a former index directory must not inherit its
-    # pending deletes (a stale tombstone set would silently hide any
-    # rebuilt doc sharing a removed id)…
-    _winnow_delete_component(df.sparkSession, path, _WINNOW_TOMBSTONES)
-    # …nor a stale streaming add-manifest: a fresh stream over the
-    # rebuilt index restarts batch_id at 0 and winnow_index_add_batch's
-    # replay guard (batch_id <= manifest) would silently discard its
-    # early batches
-    _winnow_delete_component(df.sparkSession, path, _WINNOW_ADD_MANIFEST)
-
-
-def _winnow_meta_path(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/meta.json")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _winnow_meta_write(spark, path: str, meta: dict) -> None:
-    """Write the index meta through the Hadoop FileSystem API — the same
-    any-filesystem contract as the parquet components and the ann-index
-    layout helpers (similarity._index_has).  A driver-local open() would
-    land the meta in a bogus local directory when the index path is
-    s3a/hdfs, after which every probe/add from another driver fails with
-    'no winnow index meta' while fps.parquet sits correctly remote."""
-    import json
-
-    fs, hpath = _winnow_meta_path(spark, path)
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
+    hadoop_write_json(df.sparkSession, f"{path}/meta.json", meta)
 
 
 def _winnow_index_meta(spark, path: str) -> dict:
-    import json
+    from ..io import hadoop_read_json
 
-    fs, hpath = _winnow_meta_path(spark, path)
-    if not fs.exists(hpath):
+    meta = hadoop_read_json(spark, f"{path}/meta.json")
+    if meta is None:
         raise ValueError(
             f"no winnow index meta at {path!r}/meta.json — the directory "
             "was not written by winnow_pos_index_write"
         )
-    stream = fs.open(hpath)
-    try:
-        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-    finally:
-        stream.close()
-    return json.loads(bytes(data).decode("utf-8"))
+    return meta
+
+
+def _winnow_encode(
+    spark,
+    path: str,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    pfps_df: "DataFrame | None" = None,
+) -> DataFrame:
+    """The head of every winnow ADD: fingerprint a batch with the index's
+    SAVED parameters (never the caller's — a silent k/w mismatch would
+    make every future probe miss), after the id-type guard (a second id
+    type writes a mixed-schema parquet that later probes surface as
+    nulls) and the tombstoned-id guard."""
+    meta = _winnow_index_meta(spark, path)
+    id_type = dict(df.dtypes)[id_col]
+    if id_type != meta["id_type"]:
+        raise ValueError(
+            f"batch id column {id_col!r} has type {id_type} but the "
+            f"index was built with {meta['id_type']}; cast the batch ids"
+        )
+    WINNOW.refuse_tombstoned(spark, path, df, id_col)
+    if pfps_df is not None:
+        return pfps_df.filter(F.size("pfps") > 0)
+    return winnow_pos_index(
+        df, id_col, text_col,
+        k=meta["k"], w=meta["w"], portable=meta["portable"],
+    )
 
 
 def winnow_pos_index_add(
@@ -1105,103 +1109,34 @@ def winnow_pos_index_add(
     text_col: str = "text",
 ) -> None:
     """Incrementally ADD documents to a persisted positioned winnow
-    index: new docs are fingerprinted with the SAVED parameters (never
-    the caller's — a silent k/w mismatch would make every future probe
-    miss) and appended to the same layout. Mirrors ``ivf_pq_index_add``,
-    including the id-type guard (appending a second id type writes a
-    mixed-schema parquet that later probes surface as nulls)."""
-    meta = _winnow_index_meta(spark, path)
-    id_type = dict(df.dtypes)[id_col]
-    if id_type != meta["id_type"]:
-        raise ValueError(
-            f"batch id column {id_col!r} has type {id_type} but the "
-            f"index was built with {meta['id_type']}; cast the batch ids"
-        )
-    _winnow_refuse_tombstoned(spark, path, df, id_col)
-    pfps = winnow_pos_index(
-        df, id_col, text_col,
-        k=meta["k"], w=meta["w"], portable=meta["portable"],
-    )
-    pfps.write.mode("append").parquet(f"{path}/fps.parquet")
+    index: new docs are fingerprinted with the SAVED parameters and
+    appended to the same layout (plain at-least-once)."""
+    WINNOW.append(_winnow_encode(spark, path, df, id_col, text_col), path)
 
 
 def winnow_index_compact(
     spark, path: str, target_file_bytes: int = 128 << 20
 ) -> dict:
-    """Compact a persisted positioned winnow index — the text-side twin
-    of similarity.ann_index_compact (VERDICT r12 #6): each
+    """Compact a persisted positioned winnow index: each
     ``winnow_pos_index_add`` appends its own files to ``fps.parquet``,
     so after N small adds every probe's scan schedules ~N tiny tasks.
-    Rewrites the layout into ``ceil(bytes / target_file_bytes)``
+    Rewrites the live rows into ``ceil(live bytes / target_file_bytes)``
     size-bounded files (fps.parquet is unpartitioned — probes scan all
-    of it by design, so file COUNT is the only knob); ``meta.json`` is
-    untouched. Probe results are bit-identical before and after (the
-    span/dedup probes aggregate over the whole index — row order never
-    reaches the output; tested). Crash-bounded swap + row-count verify
-    via io.hadoop_swap_rewrite, same filesystem contract.
+    of it by design, so file COUNT is the only knob; sizing from the
+    LIVE bytes keeps a compact right after a large removal from
+    over-sharding the survivors); ``meta.json`` is untouched. Probe
+    results are bit-identical before and after (the span/dedup probes
+    aggregate over the whole index — row order never reaches the
+    output; tested). The swap and its crash bound are index_store's.
 
-    Returns ``{"files_before", "files_after", "rows"}``."""
-    from ..io import (
-        hadoop_data_file_stats,
-        hadoop_swap_rewrite,
-        require_atomic_rename,
+    Returns ``{"files_before", "files_after", "rows", "removed_rows"}``."""
+    file_bytes = max(1, int(target_file_bytes))
+    return WINNOW.compact(
+        spark, path,
+        lambda live, live_bytes: live.repartition(
+            max(1, -(-live_bytes // file_bytes))
+        ),
     )
-
-    require_atomic_rename(path, "winnow_index_compact")
-    target = f"{path}/fps.parquet"
-    files_before, n_bytes = hadoop_data_file_stats(spark, target)
-    # compaction doubles as the PHYSICAL delete for tombstoned docs
-    # (winnow_index_remove): the rewrite reads the LIVE set, removed
-    # rows leave the disk here, and the tombstone file clears after the
-    # swap. One pass for both counts (round 15): no tombstones → live ==
-    # physical; otherwise one left-join aggregate replaces two counts.
-    if not _winnow_index_has(spark, path, _WINNOW_TOMBSTONES):
-        # footer-stats count, driver-side on local filesystems (round 16)
-        from ..io import model_row_count
-
-        n_physical = model_row_count(spark, target)
-        n_rows = n_physical
-    else:
-        fps = spark.read.parquet(target)
-        tomb = spark.read.parquet(f"{path}/{_WINNOW_TOMBSTONES}")
-        marked = fps.join(
-            tomb.select("_id").distinct().withColumn("_t", F.lit(1)),
-            on="_id", how="left",
-        )
-        row = marked.agg(
-            F.count(F.lit(1)).alias("physical"),
-            F.count(F.when(F.col("_t").isNull(), F.lit(1))).alias("live"),
-        ).collect()[0]
-        n_physical, n_rows = int(row["physical"]), int(row["live"])
-    # size the rewrite from the LIVE bytes, not the physical bytes — a
-    # compact right after a large removal would otherwise over-shard the
-    # surviving rows far below target_file_bytes (round-14 ADVICE)
-    live_bytes = (
-        n_bytes if n_physical == 0 else (n_bytes * n_rows) // n_physical
-    )
-    n_files = max(1, -(-live_bytes // max(1, int(target_file_bytes))))
-
-    def write_tmp(tmp: str) -> None:
-        from ..io import model_row_count
-
-        _read_index_fps(spark, path).repartition(n_files).write.parquet(tmp)
-        staged = model_row_count(spark, tmp)
-        if staged != n_rows:
-            raise IOError(
-                f"winnow_index_compact: staged rewrite holds {staged} "
-                f"rows, expected {n_rows}; aborting before touching the "
-                "live layout"
-            )
-
-    hadoop_swap_rewrite(spark, target, write_tmp, "winnow_index_compact")
-    _winnow_delete_component(spark, path, _WINNOW_TOMBSTONES)
-    files_after, _ = hadoop_data_file_stats(spark, target)
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows": n_rows,
-        "removed_rows": n_physical - n_rows,
-    }
 
 
 def winnow_index_add_batch(
@@ -1217,12 +1152,8 @@ def winnow_index_add_batch(
     index — the exactly-once form of ``winnow_pos_index_add`` (which is
     plain at-least-once: a replayed foreachBatch append would duplicate
     its fingerprint rows, double-counting every future probe's document
-    frequencies). Same mechanism as similarity.ann_index_add_batch:
-    stage the batch's pfps, rename the staged files into ``fps.parquet``
-    under a ``b{batch_id}-`` prefix, advance ``_ADD_MANIFEST.json``
-    LAST; replays of committed batches skip, crashed batches self-clean
-    their prefix files on redo. Fingerprints use the SAVED parameters,
-    with the id-type guard.
+    frequencies), committed through index_store's exactly-once add.
+    Returns False for a replayed batch id.
 
     ``pfps_df`` (optional): a precomputed positioned frame (the
     ``(_id, pfps)`` shape) so a caller that already fingerprinted the
@@ -1230,203 +1161,42 @@ def winnow_index_add_batch(
     decision tiers — skips the re-hash. MUST have been computed with the
     index's saved parameters (callers read them from the same meta);
     empty-set rows are filtered here either way."""
-    from ..io import (
-        hadoop_delete_prefixed,
-        hadoop_read_json,
-        hadoop_staged_append,
-        hadoop_write_json,
+    return WINNOW.add_batch(
+        spark, path, batch_id,
+        lambda: _winnow_encode(spark, path, batch_df, id_col, text_col, pfps_df),
     )
-
-    manifest = hadoop_read_json(spark, f"{path}/{_WINNOW_ADD_MANIFEST}")
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False
-    meta = _winnow_index_meta(spark, path)
-    id_type = dict(batch_df.dtypes)[id_col]
-    if id_type != meta["id_type"]:
-        raise ValueError(
-            f"batch id column {id_col!r} has type {id_type} but the "
-            f"index was built with {meta['id_type']}; cast the batch ids"
-        )
-    _winnow_refuse_tombstoned(spark, path, batch_df, id_col)
-    prefix = f"b{batch_id}-"
-    target = f"{path}/fps.parquet"
-    hadoop_delete_prefixed(spark, target, prefix)
-    staging = f"{path}/.staging-b{batch_id}"
-    pfps = (
-        pfps_df.filter(F.size("pfps") > 0)
-        if pfps_df is not None
-        else winnow_pos_index(
-            batch_df, id_col, text_col,
-            k=meta["k"], w=meta["w"], portable=meta["portable"],
-        )
-    )
-    pfps.write.mode("overwrite").parquet(staging)
-    hadoop_staged_append(spark, staging, target, prefix)
-    hadoop_write_json(
-        spark, f"{path}/{_WINNOW_ADD_MANIFEST}", {"batch_id": int(batch_id)}
-    )
-    return True
-
-
-_WINNOW_TOMBSTONES = "tombstones.parquet"
-_WINNOW_ADD_MANIFEST = "_ADD_MANIFEST.json"
-
-
-def _winnow_index_has(spark, path: str, name: str) -> bool:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _winnow_delete_component(spark, path: str, name: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-
-
-def _read_index_fps(spark, path: str) -> DataFrame:
-    """The LIVE fingerprint set of a persisted positioned winnow index:
-    ``fps.parquet`` minus any tombstoned doc ids (winnow_index_remove).
-    Every probe surface (spans/scrub/dedup, the streaming dedup job, the
-    stats verb) reads through here, so a removed doc stops matching —
-    and stops SUPPRESSING near-dups — immediately, before the physical
-    delete that the next winnow_index_compact performs. No tombstones →
-    the plain scan (plus the parallelism spread), zero other overhead.
-
-    _ensure_parallelism matters HERE specifically: winnow_index_compact
-    rewrites fps.parquet into size-targeted files, so a compacted
-    moderate index scans as very few tasks while the consumers explode
-    fingerprints and run candidate joins — measured at the 100x stress
-    decade, the probe over a one-file compacted index serialized to
-    15.7 s vs 3.9 s fragmented; the spread restores the fan-out and is
-    a no-op once files outnumber cores (the production case)."""
-    fps = _ensure_parallelism(spark.read.parquet(f"{path}/fps.parquet"))
-    if not _winnow_index_has(spark, path, _WINNOW_TOMBSTONES):
-        return fps
-    tomb = (
-        spark.read.parquet(f"{path}/{_WINNOW_TOMBSTONES}")
-        .select("_id")
-        .distinct()
-    )
-    return fps.join(tomb, on="_id", how="left_anti")
-
-
-def _winnow_refuse_tombstoned(spark, path: str, df: DataFrame, id_col: str) -> None:
-    """Shared add-surface guard: a tombstoned doc id cannot be re-added
-    until compaction physically drops it — the live-read anti-join would
-    suppress the NEW row too, silently losing the re-add."""
-    if not _winnow_index_has(spark, path, _WINNOW_TOMBSTONES):
-        return
-    tomb = (
-        spark.read.parquet(f"{path}/{_WINNOW_TOMBSTONES}")
-        .select("_id")
-        .distinct()
-    )
-    n_hit = (
-        df.select(F.col(id_col).alias("_id"))
-        .join(tomb, on="_id", how="semi")
-        .count()
-    )
-    if n_hit:
-        raise ValueError(
-            f"{n_hit} id(s) in the batch are tombstoned in the index at "
-            f"{path!r} — run winnow_index_compact first (it physically "
-            "drops removed rows and clears the tombstone set), then "
-            "re-add"
-        )
 
 
 def winnow_index_remove(spark, path: str, ids, id_col: "str | None" = None) -> dict:
     """Remove documents from a persisted positioned winnow index — the
-    text-side twin of similarity.ann_index_remove (the takedown leg):
-    logical O(removed) tombstone append now, physical delete folded into
-    the next winnow_index_compact. A removed doc immediately stops
-    matching in every probe AND stops suppressing near-dups in the
-    incremental dedup tiers — exactly what honoring a takedown requires
-    (its content is no longer in the corpus, so it must not veto a
-    re-crawl). Idempotent: duplicate tombstones are ignored by the
-    distinct anti-join. Until the next compact a tombstoned id cannot be
-    re-added (the add surfaces refuse — the anti-join would suppress the
-    new row too).
+    takedown leg, with index_store's remove contract. A removed doc
+    immediately stops matching in every probe AND stops suppressing
+    near-dups in the incremental dedup tiers — exactly what honoring a
+    takedown requires (its content is no longer in the corpus, so it
+    must not veto a re-crawl).
 
     ``ids``: a DataFrame carrying the index's id column (``id_col``
     defaults to the saved meta's), or a plain iterable of id values.
 
     Returns ``{"requested", "matched_live", "tombstoned_total"}``."""
     meta = _winnow_index_meta(spark, path)
-    id_col = id_col or meta.get("id_col", "doc_id")
-    if isinstance(ids, DataFrame):
-        if id_col not in ids.columns:
-            raise ValueError(
-                f"winnow_index_remove: ids frame has no {id_col!r} column"
-            )
-        got = dict(ids.dtypes)[id_col]
-        if got != meta["id_type"]:
-            raise ValueError(
-                f"winnow_index_remove: ids column {id_col!r} has type "
-                f"{got} but the index stores {meta['id_type']}; cast"
-            )
-        ids_df = ids.select(F.col(id_col).alias("_id"))
-        requested = ids_df.count()
-    else:
-        rows = [(i,) for i in ids]
-        requested = len(rows)
-        ids_df = local_frame(spark, rows, f"_id {meta['id_type']}")
-    matched_live = (
-        _read_index_fps(spark, path)
-        .join(ids_df.distinct(), on="_id", how="semi")
-        .count()
+    return WINNOW.remove(
+        spark, path, ids, id_col or meta.get("id_col", "doc_id"),
+        meta["id_type"],
     )
-    tomb_path = f"{path}/{_WINNOW_TOMBSTONES}"
-    # iterable-sourced ids append driver-side (the value SET is what the
-    # anti-joins read — round 16, guide §5); DataFrame ids keep the
-    # Spark write (they may be corpus-scale)
-    from ..io import local_rows_of, model_distinct_count, write_model_parquet
-
-    local_ids = local_rows_of(ids_df)
-    if local_ids is not None:
-        uniq = list(dict.fromkeys(tuple(r) for r in local_ids))
-        write_model_parquet(
-            spark, uniq, ids_df.schema, tomb_path, mode="append"
-        )
-    else:
-        ids_df.distinct().coalesce(1).write.mode("append").parquet(tomb_path)
-    total = model_distinct_count(spark, tomb_path)
-    return {
-        "requested": int(requested),
-        "matched_live": int(matched_live),
-        "tombstoned_total": int(total),
-    }
 
 
 def winnow_index_stats(spark, path: str) -> dict:
-    """Layout report for a persisted positioned winnow index — the
-    ann_index_stats twin: meta parameters, fingerprinted docs (LIVE —
-    tombstoned ids excluded, what probes see), pending tombstones, data
-    files/bytes (the fragmentation signal that schedules
-    winnow_index_compact)."""
-    from ..io import hadoop_data_file_stats
-
+    """Layout report for a persisted positioned winnow index: meta
+    parameters, fingerprinted docs (LIVE — what probes see), pending
+    tombstones, data files/bytes (the fragmentation signal that
+    schedules winnow_index_compact)."""
     meta = _winnow_index_meta(spark, path)
-    target = f"{path}/fps.parquet"
-    n_files, n_bytes = hadoop_data_file_stats(spark, target)
-    from ..io import model_distinct_count
-
-    n_tomb = (
-        model_distinct_count(spark, f"{path}/{_WINNOW_TOMBSTONES}")
-        if _winnow_index_has(spark, path, _WINNOW_TOMBSTONES)
-        else 0
-    )
     return {
         "k": meta["k"], "w": meta["w"], "portable": meta["portable"],
         "id_type": meta["id_type"],
-        "docs": _read_index_fps(spark, path).count(),
-        "tombstones": n_tomb,
-        "data_files": n_files,
-        "data_bytes": n_bytes,
+        "docs": WINNOW.read_live(spark, path).count(),
+        **WINNOW.layout_stats(spark, path),
     }
 
 
@@ -1444,7 +1214,7 @@ def winnow_index_spans(
     layout, fingerprint parameters loaded from the index meta). The
     index parquet is scan-only; the batch broadcasts."""
     meta = _winnow_index_meta(spark, path)
-    index = _read_index_fps(spark, path)
+    index = WINNOW.read_live(spark, path)
     return winnow_spans_against_index(
         batch, index, id_col, text_col,
         k=meta["k"], w=meta["w"], threshold=threshold,
@@ -1464,7 +1234,7 @@ def winnow_index_scrub(
     """Passage-level decontamination against a persisted positioned
     winnow index (winnow_scrub_against_index over the saved layout)."""
     meta = _winnow_index_meta(spark, path)
-    index = _read_index_fps(spark, path)
+    index = WINNOW.read_live(spark, path)
     return winnow_scrub_against_index(
         batch, index, id_col, text_col,
         k=meta["k"], w=meta["w"], threshold=threshold,
@@ -1487,7 +1257,7 @@ def winnow_index_dedup(
     (winnow_dedup_against_index) runs over the same index the span
     tiers probe — one persisted artifact serves all three actions."""
     meta = _winnow_index_meta(spark, path)
-    index = _read_index_fps(spark, path).select(
+    index = WINNOW.read_live(spark, path).select(
         "_id", _pos_vals("pfps").alias("fps")
     )
     return winnow_dedup_against_index(

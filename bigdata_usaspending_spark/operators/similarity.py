@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..index_store import IndexStore, has
 from ..io import local_frame, model_row_count
 
 
@@ -530,9 +531,9 @@ def ivf_index_write(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Persist an IVF index — the ANN counterpart of dedup's
-    fingerprint_index: build once, probe batches forever after without
-    rescanning or re-training. Layout:
+    """Persist an IVF index: build once, probe batches forever after
+    without rescanning or re-training (the index_store lifecycle).
+    Family components:
 
     - ``{path}/centroids.parquet`` — the bounded model state (C rows);
     - ``{path}/vectors.parquet`` — every vector with its assigned cell,
@@ -544,7 +545,9 @@ def ivf_index_write(
     one partitioned write; nothing driver-side but the centroid rows —
     which are collected ONCE and localized, so a centroids frame carrying
     expensive lineage (ivf_refine re-scans the corpus per iteration) is
-    never executed twice (once for the write, once inside ivf_assign)."""
+    never executed twice (once for the write, once inside ivf_assign).
+    A rebuild clears the old index's state, PQ codebooks and rotation
+    included (index_store)."""
     from ..io import local_rows_of
 
     local_cents = (
@@ -555,21 +558,7 @@ def ivf_index_write(
         )
     )
     assigned = ivf_assign(df, local_cents, id_col=id_col, vec_col=vec_col)
-    _write_model_component(local_cents, f"{path}/centroids.parquet")
-    (
-        assigned.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors.parquet")
-    )
-    # a rebuild over a former index directory must not inherit its
-    # pending deletes: a stale tombstone set would silently hide any
-    # rebuilt vector sharing a removed id (the stale-rotation hazard's
-    # twin on the delete path)
-    _delete_index_component(df.sparkSession, path, _TOMBSTONES)
-    # …nor a stale streaming add-manifest: a fresh stream over the
-    # rebuilt index restarts batch_id at 0 and the replay guard
-    # (batch_id <= manifest) would silently discard its early batches
-    _delete_index_component(df.sparkSession, path, _ADD_MANIFEST)
+    ANN.rebuild(assigned, path, {"centroids.parquet": local_cents})
 
 
 def ivf_index_add(
@@ -581,8 +570,8 @@ def ivf_index_add(
     max_cells: int = 65_536,
 ) -> None:
     """Incrementally ADD vectors to a persisted IVF index — the index
-    lifecycle's middle step (build once → add batches forever → probe),
-    the ANN twin of the incremental dedup index. New vectors are
+    lifecycle's middle step (build once → add batches forever → probe).
+    New vectors are
     assigned with the SAVED centroids (one bounded read + one broadcast
     kernel map — the index is never rescanned, the model never
     retrained) and appended into the same partitionBy(cell) layout, so
@@ -591,11 +580,8 @@ def ivf_index_add(
     Standard IVF caveat (faiss semantics): adds do not move centroids;
     if the data distribution drifts far from the training set, rebuild
     with fresh centroids rather than adding forever."""
-    (
-        _prepare_add_frame(spark, path, df, id_col, vec_col, max_cells)
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors.parquet")
+    ANN.append(
+        _prepare_add_frame(spark, path, df, id_col, vec_col, max_cells), path
     )
 
 
@@ -624,7 +610,7 @@ def ivf_index_topk(
     stale matrix over un-rotated vectors must fail loudly, not probe
     wrong (the ann_index_search_many guard, kept in agreement so both
     probe surfaces of one index behave identically)."""
-    if _index_has(spark, path, "rotation.parquet"):
+    if has(spark, path, "rotation.parquet"):
         raise ValueError(
             f"index at {path!r} has rotation.parquet but is probed as "
             "plain IVF — a rotation is only valid on the IVF-PQ layout; "
@@ -2558,89 +2544,35 @@ def _write_index_rotation(spark, rotation, path: str) -> None:
     )
 
 
-def _index_has(spark, path: str, name: str) -> bool:
-    """Existence check for an index-layout component through the Hadoop
-    FileSystem API, so layout autodetection works on ANY filesystem the
-    index was written to (s3a/hdfs/local alike) — a driver-local
-    os.path probe would silently miss components on object stores,
-    which for the rotation means silently WRONG probes, not an error."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _delete_index_component(spark, path: str, name: str) -> None:
-    """Remove an index-layout component if present (Hadoop FS — works on
-    any filesystem the index lives on)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-
-
-_TOMBSTONES = "tombstones.parquet"
-
-
-def _write_model_component(df: DataFrame, path: str) -> None:
-    """Overwrite one bounded model component (centroids/codebooks). A
-    local_frame's rows are written DRIVER-SIDE on local filesystems (no
-    Spark job / commit protocol — round 16, guide §5: each such 1-task
-    write job cost ~0.2-0.4 s of scheduling per lifecycle verb); any
-    other frame, or a non-local scheme, keeps the Spark write."""
-    from ..io import local_rows_of, write_model_parquet
-
-    rows = local_rows_of(df)
-    if rows is not None:
-        write_model_parquet(df.sparkSession, rows, df.schema, path)
-    else:
-        df.write.mode("overwrite").parquet(path)
+# the ANN family of the persisted-index store: vectors are partitioned by
+# cell, and a rebuild clears whichever of codebooks/rotation it does not
+# write (every later add and probe autodetects them from their presence)
+ANN = IndexStore(
+    "ann_index", "vectors.parquet", partition_by="cell",
+    stale=("codebooks.parquet", "rotation.parquet"),
+)
 
 
 def _read_index_vectors(spark, path: str) -> DataFrame:
-    """The LIVE vector set of a persisted index: ``vectors.parquet``
-    minus any tombstoned ids (``ann_index_remove``). Every probe/stat
-    surface reads through here so a removed vector disappears from
-    results immediately, before the physical delete that the next
-    ``ann_index_compact`` performs. When no tombstones exist this is the
-    plain scan — zero overhead on the steady-state path; with tombstones
-    the anti-join is AQE-sized (the set is bounded by the compaction
-    cadence, so it plans as a broadcast in practice) and Catalyst still
-    pushes the callers' ``cell IN (...)`` partition predicate below the
-    join to the scan."""
-    vec = spark.read.parquet(f"{path}/vectors.parquet")
-    if not _index_has(spark, path, _TOMBSTONES):
-        return vec
-    tomb = spark.read.parquet(f"{path}/{_TOMBSTONES}")
-    tcol = tomb.columns[0]
-    return vec.join(tomb.select(tcol).distinct(), on=tcol, how="left_anti")
+    """The LIVE vector set of a persisted index (``ANN.read_live``):
+    every probe and stat reads through it, so a removed vector disappears
+    from results at once; a probe's ``cell IN (...)`` predicate still
+    prunes the scan."""
+    return ANN.read_live(spark, path)
 
 
 def ann_index_remove(spark, path: str, ids, id_col: str = "vec_id") -> dict:
     """Remove vectors from a persisted IVF / IVF-PQ index — the faiss
     ``remove_ids`` analog, the takedown leg a training-data pipeline
-    must honor. Deletion is LOGICAL and O(removed ids): the ids append
-    to ``{path}/tombstones.parquet`` and every probe surface anti-joins
-    them out (``_read_index_vectors``); the next ``ann_index_compact``
-    physically drops the rows and clears the tombstone set — the
-    merge-on-read delete-vector pattern (Iceberg/Delta deletion vectors)
-    without a table format. Idempotent by construction: re-removing an
-    id appends a duplicate tombstone that the distinct anti-join
-    ignores, so replays are harmless.
+    must honor. Deletion is logical and O(removed ids) until the next
+    ``ann_index_compact`` (index_store's remove contract).
 
     ``ids``: a DataFrame carrying ``id_col`` (the scale path) or a
     plain iterable of id values. The id column must exist in the vector
     layout with the same type (loud mismatch — a silently
     never-matching tombstone would be a takedown that didn't happen).
 
-    Until the next compact, a tombstoned id CANNOT be re-added (the add
-    surfaces refuse it): the anti-join would suppress the new row too,
-    silently losing the re-add. Compact first, then add.
-
-    Returns ``{"requested", "matched_live", "tombstoned_total"}`` —
-    ``matched_live`` is the exact witness count of ids that were
-    actually present (and visible) in the index at remove time."""
+    Returns ``{"requested", "matched_live", "tombstoned_total"}``."""
     vec_schema = spark.read.parquet(f"{path}/vectors.parquet").schema
     if id_col not in vec_schema.names:
         raise ValueError(
@@ -2648,56 +2580,9 @@ def ann_index_remove(spark, path: str, ids, id_col: str = "vec_id") -> dict:
             f"index's vector layout {vec_schema.names}; pass the id_col "
             "the index was built with"
         )
-    id_type = vec_schema[id_col].dataType.simpleString()
-    if isinstance(ids, DataFrame):
-        if id_col not in ids.columns:
-            raise ValueError(
-                f"ann_index_remove: ids frame has no {id_col!r} column"
-            )
-        got = dict(ids.dtypes)[id_col]
-        if got != id_type:
-            raise ValueError(
-                f"ann_index_remove: ids column {id_col!r} has type "
-                f"{got} but the index stores {id_type}; cast the ids"
-            )
-        ids_df = ids.select(id_col)
-        requested = ids_df.count()
-    else:
-        rows = [(i,) for i in ids]
-        requested = len(rows)
-        ids_df = local_frame(spark, rows, f"{id_col} {id_type}")
-    tomb_path = f"{path}/{_TOMBSTONES}"
-    if _index_has(spark, path, _TOMBSTONES):
-        existing_col = spark.read.parquet(tomb_path).columns[0]
-        if existing_col != id_col:
-            raise ValueError(
-                f"ann_index_remove: existing tombstones use id column "
-                f"{existing_col!r}, not {id_col!r}"
-            )
-    matched_live = (
-        _read_index_vectors(spark, path)
-        .join(ids_df.distinct(), on=id_col, how="semi")
-        .count()
+    return ANN.remove(
+        spark, path, ids, id_col, vec_schema[id_col].dataType.simpleString()
     )
-    # iterable-sourced ids append driver-side (dedup in Python — the
-    # value SET is what every consumer reads; round 16, guide §5); the
-    # DataFrame path keeps the Spark write (ids may be corpus-scale)
-    from ..io import local_rows_of, model_distinct_count, write_model_parquet
-
-    local_ids = local_rows_of(ids_df)
-    if local_ids is not None:
-        uniq = list(dict.fromkeys(tuple(r) for r in local_ids))
-        write_model_parquet(
-            spark, uniq, ids_df.schema, tomb_path, mode="append"
-        )
-    else:
-        ids_df.distinct().coalesce(1).write.mode("append").parquet(tomb_path)
-    total = model_distinct_count(spark, tomb_path)
-    return {
-        "requested": int(requested),
-        "matched_live": int(matched_live),
-        "tombstoned_total": int(total),
-    }
 
 
 def _read_index_rotation(spark, path: str, max_dim: int = 8192):
@@ -2705,7 +2590,7 @@ def _read_index_rotation(spark, path: str, max_dim: int = 8192):
     otherwise) — the probe/add-side half of the faiss IndexPreTransform
     contract: raw inputs are mapped into the index's rotated space
     before any other math."""
-    if not _index_has(spark, path, "rotation.parquet"):
+    if not has(spark, path, "rotation.parquet"):
         return None
     rows = sorted(
         (r["i"], list(r["vals"]))
@@ -2774,37 +2659,28 @@ def ivf_pq_index_write(
     encoded = ivf_pq_encode(
         assigned, local_cents, local_cb, vec_col=vec_col, dsub=dsub
     )
-    _ivf_pq_index_write_encoded(encoded, local_cents, local_cb, path)
-    if rotation is not None:
-        _write_index_rotation(spark, rotation, path)
+    _ivf_pq_index_write_encoded(encoded, local_cents, local_cb, path, rotation)
 
 
 def _ivf_pq_index_write_encoded(
-    encoded: DataFrame, local_cents: DataFrame, local_cb: DataFrame, path: str
+    encoded: DataFrame,
+    local_cents: DataFrame,
+    local_cb: DataFrame,
+    path: str,
+    rotation: "list[list[float]] | None" = None,
 ) -> None:
     """Write an IVF-PQ index from an ALREADY-encoded frame plus localized
     model frames — the shared tail of ivf_pq_index_write, split out so a
     caller that already holds the encoded rows (the lifecycle audit
-    builds them anyway) doesn't pay a second assign+encode pass."""
-    _write_model_component(local_cents, f"{path}/centroids.parquet")
-    _write_model_component(local_cb, f"{path}/codebooks.parquet")
-    (
-        encoded.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors.parquet")
+    builds them anyway) doesn't pay a second assign+encode pass. The
+    rebuild clears any rotation left by a former OPQ build; ``rotation``
+    is written after it."""
+    ANN.rebuild(
+        encoded, path,
+        {"centroids.parquet": local_cents, "codebooks.parquet": local_cb},
     )
-    # a rebuild over a former OPQ directory must not leave a stale
-    # rotation behind — probes apply it automatically when present, so
-    # a leftover matrix over an un-rotated layout means silently wrong
-    # neighbors (callers that DO pass a rotation re-write it after this)
-    _delete_index_component(encoded.sparkSession, path, "rotation.parquet")
-    # …nor a stale tombstone set (it would silently hide rebuilt
-    # vectors that share a removed id)…
-    _delete_index_component(encoded.sparkSession, path, _TOMBSTONES)
-    # …nor a stale streaming add-manifest (a fresh stream over the
-    # rebuild restarts batch_id at 0; the replay guard would silently
-    # discard its early batches)
-    _delete_index_component(encoded.sparkSession, path, _ADD_MANIFEST)
+    if rotation is not None:
+        _write_index_rotation(encoded.sparkSession, rotation, path)
 
 
 def ivf_pq_index_add(
@@ -2827,11 +2703,8 @@ def ivf_pq_index_add(
     centroids nor codebooks; if the data distribution drifts far from
     the training set, quantization error grows — rebuild rather than
     adding forever."""
-    (
-        _prepare_add_frame(spark, path, df, id_col, vec_col, max_cells)
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors.parquet")
+    ANN.append(
+        _prepare_add_frame(spark, path, df, id_col, vec_col, max_cells), path
     )
 
 
@@ -2855,7 +2728,7 @@ def _prepare_add_frame(
     is refused HERE too, so the corrupt layout fails at the write
     surface instead of silently appending raw un-rotated vectors that
     only blow up at probe time."""
-    if _index_has(spark, path, "rotation.parquet") and not _index_has(
+    if has(spark, path, "rotation.parquet") and not has(
         spark, path, "codebooks.parquet"
     ):
         raise ValueError(
@@ -2864,28 +2737,11 @@ def _prepare_add_frame(
             "layout; refusing to append into the corrupt layout "
             "(rebuild the index, or delete the stale rotation.parquet)"
         )
-    if _index_has(spark, path, _TOMBSTONES):
-        # a tombstoned id cannot be re-added until compaction physically
-        # drops it: the probe-side anti-join would suppress the NEW row
-        # too, silently losing the re-add (ann_index_remove's contract)
-        tomb = spark.read.parquet(f"{path}/{_TOMBSTONES}")
-        tcol = tomb.columns[0]
-        n_hit = (
-            df.select(F.col(id_col).alias(tcol))
-            .join(tomb.select(tcol).distinct(), on=tcol, how="semi")
-            .count()
-        )
-        if n_hit:
-            raise ValueError(
-                f"{n_hit} id(s) in the batch are tombstoned in the index "
-                f"at {path!r} — run ann_index_compact first (it "
-                "physically drops removed rows and clears the tombstone "
-                "set), then re-add"
-            )
+    ANN.refuse_tombstoned(spark, path, df, id_col)
     local_cents = _localized_model(
         spark, f"{path}/centroids.parquet", "cell", max_cells
     )
-    if _index_has(spark, path, "codebooks.parquet"):
+    if has(spark, path, "codebooks.parquet"):
         local_cb = _localized_model(
             spark, f"{path}/codebooks.parquet", "codebook", max_cells
         )
@@ -2912,29 +2768,6 @@ def _prepare_add_frame(
     return out
 
 
-_ADD_MANIFEST = "_ADD_MANIFEST.json"
-
-
-def _index_fs(spark, p: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(p)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _read_add_manifest(spark, path: str) -> "dict | None":
-    from ..io import hadoop_read_json
-
-    return hadoop_read_json(spark, f"{path}/{_ADD_MANIFEST}")
-
-
-def _write_add_manifest(spark, path: str, batch_id: int) -> None:
-    from ..io import hadoop_write_json
-
-    hadoop_write_json(spark, f"{path}/{_ADD_MANIFEST}", {
-        "batch_id": int(batch_id),
-    })
-
-
 def ann_index_add_batch(
     spark,
     path: str,
@@ -2947,129 +2780,43 @@ def ann_index_add_batch(
     """One IDEMPOTENT micro-batch ADD to a persisted IVF / IVF-PQ index —
     the write-side twin of ann_search_batch, and the exactly-once form
     of ``*_index_add`` (which is plain at-least-once: a replayed
-    foreachBatch append would duplicate its vectors).
-
-    Mechanism (no table format needed): the batch's encoded rows are
-    staged under ``.staging-b{batch_id}``, every staged data file is
-    RENAMED into its live cell directory under a ``b{batch_id}-`` name
-    prefix, and only then does ``_ADD_MANIFEST.json`` advance. Replays
-    of a committed batch_id skip; a replay after a crash anywhere in the
-    middle first DELETES every live file carrying this batch's prefix
-    (the partial leftovers) and redoes the whole move — append
-    idempotence from file naming alone. ``ann_index_compact`` drops the
-    prefixes, which is safe: committed batches are never replayed.
+    foreachBatch append would duplicate its vectors). The batch is
+    encoded like any add and committed through index_store's
+    exactly-once add (prefix-stamped renames, manifest last).
 
     Returns True if the batch was applied, False if skipped as a replay.
-    The manifest tracks ONE monotone batch_id sequence per index:
-    manual batch-ids (the CLI's ``add --batch-id``) and a stream's
-    foreachBatch ids share it, so a manual add must use ids AFTER the
-    stream's last, and a fresh stream over an index with committed
-    manual ids would silently skip its early batches (the same
-    restart-at-0 hazard the streaming checkpoint guard exists for).
-    100-TB shape: one bounded model read + broadcast assign/encode + one
-    partitioned write per trigger; the moves are O(files in the batch)
-    namenode RPCs, no data copy."""
-    from ..io import hadoop_delete_prefixed, hadoop_staged_append
-
-    manifest = _read_add_manifest(spark, path)
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False
-    prefix = f"b{batch_id}-"
-    vectors = f"{path}/vectors.parquet"
-    hadoop_delete_prefixed(spark, vectors, prefix)
-    staging = f"{path}/.staging-b{batch_id}"
-    frame = _prepare_add_frame(
-        spark, path, batch_df, id_col, vec_col, max_cells
+    Manual batch ids (the CLI's ``add --batch-id``) and a stream's
+    foreachBatch ids share the index's one batch-id sequence, so a
+    manual add must use ids AFTER the stream's last. 100-TB shape: one
+    bounded model read + broadcast assign/encode + one partitioned write
+    per trigger; the moves are O(files in the batch) namenode RPCs, no
+    data copy."""
+    return ANN.add_batch(
+        spark, path, batch_id,
+        lambda: _prepare_add_frame(
+            spark, path, batch_df, id_col, vec_col, max_cells
+        ),
     )
-    frame.write.mode("overwrite").partitionBy("cell").parquet(staging)
-    hadoop_staged_append(spark, staging, vectors, prefix)
-    _write_add_manifest(spark, path, batch_id)
-    return True
 
 
 def ann_index_compact(spark, path: str) -> dict:
     """Compact a persisted IVF / IVF-PQ index's vector layout — the
-    merge side of the add-forever lifecycle (VERDICT r12 #6, the rollup
-    sink's merge-on-read + compaction applied to the ANN index):
-    ``ivf_index_add`` / ``ivf_pq_index_add`` append one file per cell
-    PER BATCH, so after N adds every probe opens ~N fragments per probed
+    merge side of the add-forever lifecycle: every add appends one file
+    per cell, so after N adds every probe opens ~N fragments per probed
     cell directory and the scan's task count grows with history, not
     data. Compaction rewrites ``vectors.parquet`` with one shuffle
     partitioned ON the cell column, so each cell directory collapses to
     ONE file (a cell lives in exactly one task of the partitionBy
-    write); model state (centroids/codebooks/rotation) is untouched, so
-    every probe — fixed-nprobe, adc_prune, adaptive — returns
+    write) and tombstoned rows leave the disk; model state is untouched,
+    so every probe — fixed-nprobe, adc_prune, adaptive — returns
     BIT-IDENTICAL results before and after (probe orderings are total
-    on (score, id); file order is immaterial; tested).
+    on (score, id); file order is immaterial; tested). The swap and its
+    crash bound are index_store's; object stores are refused.
 
-    Crash-bounded swap via io.hadoop_swap_rewrite (stage aside → rename
-    live aside → rename in → delete), with a row-count verification of
-    the staged copy BEFORE the live layout is touched. Works on any
-    atomic-rename filesystem (file://, hdfs://); object stores are
-    refused (snapshot-commit table formats are the answer there).
-
-    Returns ``{"files_before", "files_after", "rows"}``. 100-TB shape:
-    one shuffle sized by the cell count — run it periodically (every ~N
-    adds), exactly like the rollup sink's compact_versions cadence."""
-    from ..io import (
-        hadoop_data_file_stats,
-        hadoop_swap_rewrite,
-        require_atomic_rename,
-    )
-
-    require_atomic_rename(path, "ann_index_compact")
-    target = f"{path}/vectors.parquet"
-    files_before, _ = hadoop_data_file_stats(spark, target)
-    # compaction is also the PHYSICAL delete for tombstoned ids
-    # (ann_index_remove): the rewrite reads the LIVE set (anti-joined),
-    # so removed rows vanish from disk here and the tombstone file
-    # clears after the swap — the merge-on-read delete's merge step.
-    # One pass for both counts (round 15): with no tombstone component
-    # live == physical (skip the second scan outright); with one, a
-    # single left-join aggregate replaces the two count jobs.
-    if not _index_has(spark, path, _TOMBSTONES):
-        # parquet count() is footer-stats only — read the footers
-        # driver-side (no job) on local filesystems (round 16)
-        n_physical = model_row_count(spark, target)
-        n_rows = n_physical
-    else:
-        vec = spark.read.parquet(target)
-        tomb = spark.read.parquet(f"{path}/{_TOMBSTONES}")
-        tcol = tomb.columns[0]
-        marked = vec.join(
-            tomb.select(tcol).distinct().withColumn("_t", F.lit(1)),
-            on=tcol, how="left",
-        )
-        row = marked.agg(
-            F.count(F.lit(1)).alias("physical"),
-            F.count(F.when(F.col("_t").isNull(), F.lit(1))).alias("live"),
-        ).collect()[0]
-        n_physical, n_rows = int(row["physical"]), int(row["live"])
-
-    def write_tmp(tmp: str) -> None:
-        (
-            _read_index_vectors(spark, path)
-            .repartition("cell")
-            .write.partitionBy("cell")
-            .parquet(tmp)
-        )
-        staged = model_row_count(spark, tmp)
-        if staged != n_rows:
-            raise IOError(
-                f"ann_index_compact: staged rewrite holds {staged} rows, "
-                f"expected {n_rows}; aborting before touching the live "
-                "layout"
-            )
-
-    hadoop_swap_rewrite(spark, target, write_tmp, "ann_index_compact")
-    _delete_index_component(spark, path, _TOMBSTONES)
-    files_after, _ = hadoop_data_file_stats(spark, target)
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows": n_rows,
-        "removed_rows": n_physical - n_rows,
-    }
+    Returns ``{"files_before", "files_after", "rows", "removed_rows"}``.
+    100-TB shape: one shuffle sized by the cell count — run it
+    periodically (every ~N adds)."""
+    return ANN.compact(spark, path, lambda live, _: live.repartition("cell"))
 
 
 def ann_index_stats(spark, path: str) -> dict:
@@ -3078,44 +2825,26 @@ def ann_index_stats(spark, path: str) -> dict:
     per populated cell directory — the fragmentation signal an operator
     reads to schedule ``ann_index_compact`` (a freshly built or
     compacted index sits at ~1 file per cell; every ``*_index_add``
-    raises the ratio by one). ``vectors`` is the LIVE count (tombstoned
-    ids excluded — what probes see); ``tombstones`` is the pending
-    logical-delete backlog the next compact will physically drop. All
-    reads are metadata/model-bounded except the counts (parquet count()
-    is rowgroup-stats only)."""
-    from ..io import hadoop_data_file_stats
-
-    vectors = f"{path}/vectors.parquet"
-    vec = _read_index_vectors(spark, path)
-    n_files, n_bytes = hadoop_data_file_stats(spark, vectors)
+    raises the ratio by one). ``vectors`` is the LIVE count (what probes
+    see); ``tombstones`` is the pending delete backlog."""
     # one pass for the live-vector count AND the populated-cell count
-    # (round 15: these were two separate scan jobs)
-    live = vec.agg(
+    live = _read_index_vectors(spark, path).agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("cell").alias("cells"),
     ).collect()[0]
     n_cell_dirs = int(live["cells"])
-    from ..io import model_distinct_count
-
-    n_tomb = (
-        model_distinct_count(spark, f"{path}/{_TOMBSTONES}")
-        if _index_has(spark, path, _TOMBSTONES)
-        else 0
-    )
+    layout = ANN.layout_stats(spark, path)
     return {
         "layout": (
-            "ivf-pq" if _index_has(spark, path, "codebooks.parquet")
-            else "ivf"
+            "ivf-pq" if has(spark, path, "codebooks.parquet") else "ivf"
         ),
-        "rotation": _index_has(spark, path, "rotation.parquet"),
+        "rotation": has(spark, path, "rotation.parquet"),
         "cells": model_row_count(spark, f"{path}/centroids.parquet"),
         "populated_cells": n_cell_dirs,
         "vectors": int(live["n"]),
-        "tombstones": n_tomb,
-        "data_files": n_files,
-        "data_bytes": n_bytes,
+        **layout,
         "files_per_populated_cell": round(
-            n_files / max(1, n_cell_dirs), 2
+            layout["data_files"] / max(1, n_cell_dirs), 2
         ),
     }
 
@@ -3160,7 +2889,7 @@ def ann_index_drift(
     broadcast-centroid kernel map + the same bounded aggregate; the
     join, totals, and fold all touch ≤ cells rows. Nothing scans twice,
     no driver state beyond the cap-guarded model load."""
-    if _index_has(spark, path, "rotation.parquet") and not _index_has(
+    if has(spark, path, "rotation.parquet") and not has(
         spark, path, "codebooks.parquet"
     ):
         raise ValueError(
@@ -3173,7 +2902,7 @@ def ann_index_drift(
     )
     rotation = (
         _read_index_rotation(spark, path)
-        if _index_has(spark, path, "codebooks.parquet")
+        if has(spark, path, "codebooks.parquet")
         else None
     )
     if rotation is not None:
@@ -3410,7 +3139,7 @@ def ann_index_search_many(
             "adaptive_nprobe subsumes adc_prune — pass one or the other"
         )
 
-    is_pq = _index_has(spark, path, "codebooks.parquet")
+    is_pq = has(spark, path, "codebooks.parquet")
     if adaptive_nprobe and not is_pq:
         raise ValueError(
             "adaptive_nprobe needs the IVF-PQ layout — the Best-Bin-First "

@@ -567,11 +567,6 @@ def _winnow_kernel(k: int, w: int, robust: bool, portable: bool):
     return _fps.asNondeterministic()
 
 
-def _winnow_md5_kernel(k: int, w: int, robust: bool):
-    """The portable-path kernel (round-15 name, kept for callers/tests)."""
-    return _winnow_kernel(k, w, robust, portable=True)
-
-
 def winnow_fingerprints(
     col: Column | str,
     k: int = 8,
@@ -896,7 +891,7 @@ def _bm25_per_doc(
     ONE pure map over the corpus (bounded HOF ``size(filter(tokens, =t))``
     per term — no explode, no shuffle beyond the parallelism spread).
 
-    _ensure_parallelism matters HERE (round 16, the _read_index_fps
+    _ensure_parallelism matters HERE (round 16, the winnow index-scan
     lesson): a small-file corpus scans as ONE task while this map runs
     CPU-heavy per-row HOFs — q_bm25_batch profiled two ~0.7 s single-task
     jobs (the stats pass and the scoring pass) with 31 idle cores. The

@@ -1235,8 +1235,9 @@ def q_ann_opq_index(spark: SparkSession, sf: str) -> DataFrame:
         # over `rotated`); the rotation is written after, exactly as the
         # plain write path does (round 16)
         encoded = similarity.ivf_pq_encode(assigned, centroids, cb)
-        similarity._ivf_pq_index_write_encoded(encoded, centroids, cb, tmp)
-        similarity._write_index_rotation(spark, rot, tmp)
+        similarity._ivf_pq_index_write_encoded(
+            encoded, centroids, cb, tmp, rot
+        )
         similarity.ivf_pq_index_add(spark, tmp, batch)  # RAW batch
         hit = {
             r.vec_id

@@ -256,8 +256,9 @@ def q_corpus_semantic_opq(spark: SparkSession, sf: str) -> DataFrame:
         # reuse the training pass's assigned frame — q_ann_opq_index's
         # round-16 note (one ArrowEvalPython assign pass saved)
         encoded = similarity.ivf_pq_encode(assigned, centroids, cb)
-        similarity._ivf_pq_index_write_encoded(encoded, centroids, cb, tmp)
-        similarity._write_index_rotation(spark, rot, tmp)
+        similarity._ivf_pq_index_write_encoded(
+            encoded, centroids, cb, tmp, rot
+        )
         similarity.ivf_pq_index_add(spark, tmp, batch)  # RAW batch
         hit = {
             r.vec_id
@@ -435,7 +436,7 @@ def q_winnow_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     ``replay_skipped`` (re-applying batch 0 is a no-op), and
     ``saved_params_ok`` (the probe ran with the index's saved
     fingerprint parameters)."""
-    from ..io import hadoop_read_json
+    from ..index_store import read_manifest
     from ..operators import dedup
     from .oracle_lib import _ROBUST_K, _ROBUST_W, _SPAN_MAX_DF, _SPAN_THRESHOLD
 
@@ -462,7 +463,7 @@ def q_winnow_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
             threshold=_SPAN_THRESHOLD, max_fingerprint_df=_SPAN_MAX_DF,
         )
         meta = dedup._winnow_index_meta(spark, tmp)
-        manifest = hadoop_read_json(spark, f"{tmp}/_ADD_MANIFEST.json")
+        manifest = read_manifest(spark, tmp)
         add_committed = bool(applied) and manifest == {"batch_id": 0}
         saved_params_ok = (
             meta["k"], meta["w"], meta["portable"],

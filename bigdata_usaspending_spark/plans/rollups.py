@@ -39,16 +39,6 @@ def total_by_entity(
     return sum_by_key(joined, [dim_key, *carried_dim_cols], amount_col)
 
 
-def total_by_two_keys(
-    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str,
-    second_key: str, amount_col: str,
-) -> DataFrame:
-    """awarding_sub_agency_by_recipient analog (two grouping keys)."""
-    on = fact_key if fact_key == dim_key else fact[fact_key] == dim[dim_key]
-    joined = join_dim_fact(fact, dim, on=on)
-    return sum_by_key(joined, [dim_key, second_key], amount_col)
-
-
 def total_by_month(
     fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str,
     date_col: str, amount_col: str,

@@ -2049,25 +2049,14 @@ def stream_ann_index_add(
     add-batches instead of growing with stream lifetime — the rollup
     sink's compaction cadence applied to the ANN layout.
 
-    ``checkpoint`` is REQUIRED once the add manifest exists (the
-    stream_build_corpus rationale: a fresh query restarts batch_id at 0
-    and the replay guard would silently discard every new batch)."""
+    ``checkpoint`` is REQUIRED once the add manifest exists
+    (index_store.require_checkpoint)."""
+    from ..index_store import require_checkpoint
     from ..operators import similarity
 
-    if not checkpoint:
-        manifest = similarity._read_add_manifest(
-            vectors.sparkSession, index_path
-        )
-        if manifest is not None:
-            raise ValueError(
-                f"stream_ann_index_add: index at {index_path!r} already "
-                f"has a committed add manifest "
-                f"(batch_id={manifest['batch_id']}) but no "
-                "checkpointLocation was given — a fresh query restarts "
-                "batch_id at 0 and the exactly-once replay guard would "
-                "silently discard every new batch. Pass the original "
-                "checkpoint to resume."
-            )
+    require_checkpoint(
+        vectors.sparkSession, index_path, checkpoint, "stream_ann_index_add"
+    )
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
         applied = similarity.ann_index_add_batch(
@@ -2128,8 +2117,9 @@ def winnow_index_dedup_batch(
     partially-committed ``b{batch_id}-`` fingerprint files and every
     such doc would self-match at Jaccard 1.0 — so the replay self-cleans
     the batch's prefix from ``fps.parquet`` FIRST, before anything reads
-    it (the add would do the same clean, but the decisions are lazily
-    evaluated at the sink write, which runs before the add).
+    it (``WINNOW.begin_batch``; the add would do the same clean, but the
+    decisions are lazily evaluated at the sink write, which runs before
+    the add).
 
     ``evidence=True`` applies the drop-evidence contract
     (winnow_dedup_append_batch's evidence form) to the SINK rows: each
@@ -2139,17 +2129,12 @@ def winnow_index_dedup_batch(
     needs, so the append side is unchanged; decisions then derive from
     the span pair frames (equal to the value tiers' at cap=None;
     tested bit-equal to the evidence ledger over the same feed)."""
-    from ..io import hadoop_delete_prefixed, hadoop_read_json
     from ..operators import dedup as dd
     from ..operators.text import winnow_fingerprints
 
     spark = batch_df.sparkSession
-    manifest = hadoop_read_json(spark, f"{index_path}/_ADD_MANIFEST.json")
-    if manifest is not None and batch_id <= manifest["batch_id"]:
+    if not dd.WINNOW.begin_batch(spark, index_path, batch_id):
         return False
-    hadoop_delete_prefixed(
-        spark, f"{index_path}/fps.parquet", f"b{batch_id}-"
-    )
     meta = dd._winnow_index_meta(spark, index_path)
     bpf = batch_df.select(
         F.col(id_col).alias("_id"),
@@ -2161,7 +2146,7 @@ def winnow_index_dedup_batch(
     if evidence:
         per_doc = _winnow_evidence_per_doc(
             batch_df, bpf,
-            dd._read_index_fps(spark, index_path),
+            dd.WINNOW.read_live(spark, index_path),
             id_col, text_col, meta["k"], meta["w"], threshold,
             meta["portable"], max_fingerprint_df,
         )
@@ -2187,7 +2172,7 @@ def winnow_index_dedup_batch(
             .select(F.col("id_b").alias(id_col))
             .distinct()
         )
-        index = dd._read_index_fps(spark, index_path).select(
+        index = dd.WINNOW.read_live(spark, index_path).select(
             "_id", dd._pos_vals("pfps").alias("fps")
         )
         survivors_vs_state = dd.winnow_dedup_against_index(
@@ -2247,25 +2232,14 @@ def stream_winnow_index_dedup(
     (tested). ``evidence=True`` adds the drop-evidence structs to the
     sink rows (winnow_index_dedup_batch's evidence contract).
 
-    ``checkpoint`` is REQUIRED once the index's add manifest exists (the
-    stream_build_corpus rationale)."""
-    from ..io import hadoop_read_json
+    ``checkpoint`` is REQUIRED once the index's add manifest exists
+    (index_store.require_checkpoint)."""
+    from ..index_store import require_checkpoint
     from ..operators import dedup as dd
 
-    if not checkpoint:
-        manifest = hadoop_read_json(
-            docs.sparkSession, f"{index_path}/_ADD_MANIFEST.json"
-        )
-        if manifest is not None:
-            raise ValueError(
-                f"stream_winnow_index_dedup: index at {index_path!r} "
-                f"already has a committed add manifest "
-                f"(batch_id={manifest['batch_id']}) but no "
-                "checkpointLocation was given — a fresh query restarts "
-                "batch_id at 0 and the exactly-once replay guard would "
-                "silently discard every new batch. Pass the original "
-                "checkpoint to resume."
-            )
+    require_checkpoint(
+        docs.sparkSession, index_path, checkpoint, "stream_winnow_index_dedup"
+    )
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
         applied = winnow_index_dedup_batch(
